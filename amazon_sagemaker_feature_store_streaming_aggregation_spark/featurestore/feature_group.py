@@ -55,7 +55,10 @@ snapshot versioning::
 Incoming batches are type-reconciled against the stored schema before
 the merge (numeric/timestamp upcasts are applied; anything else raises
 ``TypeError`` naming the column) — ``createDataFrame`` type inference
-must not poison the store or crash mid-write.
+must not poison the store or crash mid-write. Every snapshot read uses
+that stored schema (``_SCHEMA.json``, a superset of all committed
+columns), so reads run no schema-inference job and a column missing
+from a bucket reads as NULL.
 
 The tie policy is ``row_number`` (exactly one row per key). The
 reference's *batch* dedup uses ``dense_rank`` (keeps ties,
@@ -303,6 +306,26 @@ class FeatureGroup:
         finally:
             shutil.rmtree(lock, ignore_errors=True)
 
+    def _read_snapshots(self, paths: list[str]) -> DataFrame:
+        """Read bucket snapshot directories with the stored schema.
+
+        ``_SCHEMA.json`` is a superset of every committed column:
+        ``upsert`` writes it before any bucket commits and
+        :meth:`_write_schema` only ever adds fields. So a bucket whose
+        files lack a column (written before a later upsert added it)
+        reads that column as NULL, and no schema-inference or
+        footer-merge job runs. Resolve the snapshot versions BEFORE
+        calling this: a version committed by a writer with a new
+        column is then read with a schema that already holds it.
+        """
+        stored = self._stored_schema()
+        if stored is None:
+            raise ValueError(
+                f"feature group {self.name!r}: snapshots exist but "
+                "_SCHEMA.json is missing"
+            )
+        return self.spark.read.schema(stored).parquet(*paths)
+
     def _reconcile(self, df: DataFrame, stored: T.StructType) -> DataFrame:
         """Cast incoming columns to the stored column types (upcasts
         only); raise TypeError on an incompatible column instead of
@@ -368,32 +391,26 @@ class FeatureGroup:
         if not touched:
             return
 
-        # Persist the (merged) schema BEFORE any bucket commits: a
-        # crash after commits but before a trailing schema write would
-        # leave live data that delete() silently no-ops on (stored is
-        # None -> 0) and get_record() can't route — a superset schema
-        # written early is harmless, and the post-round write below
-        # still unions in columns discovered from existing buckets.
+        # Persist the (merged) schema BEFORE any bucket commits: every
+        # snapshot read uses it (see _read_snapshots), so it must hold
+        # each column a committed bucket holds, and a crash after the
+        # commits must not leave live data without it. A merge reads
+        # the stored schema, so it writes no column outside it.
         self._write_schema(
             T.StructType([f for f in df.schema.fields if f.name != _BUCKET])
         )
 
         remaining = touched
-        last_schema: T.StructType | None = None
         for _attempt in range(max_retries + 1):
             if not remaining:
                 break
-            remaining, round_schema = self._merge_commit_round(df, remaining)
-            if round_schema is not None:
-                last_schema = round_schema
+            remaining = self._merge_commit_round(df, remaining)
         if remaining:
             raise RuntimeError(
                 f"feature group {self.name!r}: buckets {remaining} still "
                 f"conflicted after {max_retries} retries — a writer is "
                 "persistently racing this one"
             )
-        if last_schema is not None:
-            self._write_schema(last_schema)
 
     def delete(self, keys, max_retries: int = 5) -> int:
         """Remove every record for the given keys (right-to-be-forgotten
@@ -476,13 +493,8 @@ class FeatureGroup:
         shutil.rmtree(staging, ignore_errors=True)
         existing = None
         try:
-            existing = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*paths)
-                .withColumn(
-                    _BUCKET,
-                    self._bucket_expr(),
-                )
+            existing = self._read_snapshots(paths).withColumn(
+                _BUCKET, self._bucket_expr()
             )
             # three separate actions read this round's snapshot slice
             # (doomed count, kept write, tombstone write) — cache it
@@ -572,19 +584,17 @@ class FeatureGroup:
                     os.path.join(dst, "_changes"),
                 )
 
-    def _merge_commit_round(
-        self, df: DataFrame, buckets: list[int]
-    ) -> tuple[list[int], T.StructType | None]:
+    def _merge_commit_round(self, df: DataFrame, buckets: list[int]) -> list[int]:
         """One optimistic round: merge ``buckets`` against their current
-        snapshots, stage, try to commit each; return (conflicted
-        buckets, merged schema).
+        snapshots, stage, try to commit each; return the conflicted
+        buckets.
 
         The merge job reads the captured snapshot paths LAZILY — if a
         racing writer retires one mid-job (possible when it is more
         than ``snapshot_retention - 1`` commits ahead), the read fails;
         that failure is treated like a commit conflict (all buckets of
-        this round retry against re-resolved versions, schema=None)
-        rather than aborting the upsert."""
+        this round retry against re-resolved versions) rather than
+        aborting the upsert."""
         part = df.where(F.col(_BUCKET).isin([int(b) for b in buckets]))
         read_vers = {b: self._bucket_version(b) for b in buckets}
         existing_paths = [
@@ -592,14 +602,11 @@ class FeatureGroup:
         ]
         merged = part
         if existing_paths:
-            # mergeSchema: racing writers can leave buckets with
-            # different column sets; a column present in one touched
-            # bucket must not be dropped from the merge (and rewrite).
-            existing = self.spark.read.option(
-                "mergeSchema", "true"
-            ).parquet(*existing_paths).withColumn(
-                _BUCKET,
-                self._bucket_expr(),
+            # the stored schema carries every column any bucket holds,
+            # so a column of another writer's batch is kept (NULL here)
+            # in the merge and the rewrite, never dropped
+            existing = self._read_snapshots(existing_paths).withColumn(
+                _BUCKET, self._bucket_expr()
             )
             merged = existing.unionByName(part, allowMissingColumns=True)
 
@@ -634,8 +641,11 @@ class FeatureGroup:
             shutil.rmtree(staging, ignore_errors=True)
             if not _is_retired_snapshot_error(exc):
                 raise
-            return list(buckets), None
+            return list(buckets)
 
+        file_schema = T.StructType(
+            [f for f in latest.schema.fields if f.name != _BUCKET]
+        )
         if self.change_feed:
             try:
                 # Re-read the just-written staging parquet as the
@@ -646,7 +656,7 @@ class FeatureGroup:
                 # comes back int — cast it to match the computed
                 # bigint bucket on the prior side.
                 latest_read = (
-                    self.spark.read.option("mergeSchema", "true")
+                    self.spark.read.schema(file_schema)
                     .parquet(staging)
                     .withColumn(_BUCKET, F.col(_BUCKET).cast("long"))
                     .select(*latest.columns)
@@ -658,11 +668,8 @@ class FeatureGroup:
                 shutil.rmtree(staging, ignore_errors=True)
                 if not _is_retired_snapshot_error(exc):
                     raise
-                return list(buckets), None
+                return list(buckets)
 
-        empty_schema = T.StructType(
-            [f for f in latest.schema.fields if f.name != _BUCKET]
-        )
         conflicted = []
         for b in buckets:
             src = os.path.join(staging, f"{_BUCKET}={b}")
@@ -672,13 +679,13 @@ class FeatureGroup:
                 # a ZERO-ROW parquet, never a bare directory — a bare
                 # dir breaks every later read of the bucket (same rule
                 # as the delete path)
-                local_rows(self.spark, [], empty_schema).coalesce(
+                local_rows(self.spark, [], file_schema).coalesce(
                     1
                 ).write.mode("overwrite").parquet(src)
             if not self._commit_bucket(b, read_vers[b], src):
                 conflicted.append(b)
         shutil.rmtree(staging, ignore_errors=True)
-        return conflicted, empty_schema
+        return conflicted
 
     def _stage_changes(
         self, latest: DataFrame, existing: DataFrame | None, staging: str
@@ -991,13 +998,14 @@ class FeatureGroup:
     def get_latest(self) -> DataFrame:
         """The full latest-record-per-key table (one row per key).
 
-        ``mergeSchema`` because bucket snapshots can carry different
-        column sets when writers with different batches raced (a column
-        missing from one bucket must read as null, not vanish)."""
+        Read with the stored schema: bucket snapshots can carry
+        different column sets (a later upsert added a column but
+        touched only some buckets), and a column missing from a bucket
+        reads as NULL. Building the frame runs no Spark job."""
         snaps = self._live_snapshots()
         if not snaps:
             raise ValueError(f"feature group {self.name!r} has no data")
-        return self.spark.read.option("mergeSchema", "true").parquet(*snaps)
+        return self._read_snapshots(snaps)
 
     def version_map(self) -> dict[int, int]:
         """Current committed version per bucket — the cursor shape
@@ -1046,34 +1054,35 @@ class FeatureGroup:
             raise ValueError(
                 f"feature group {self.name!r}: empty version cursor"
             )
-        return self.spark.read.option("mergeSchema", "true").parquet(*snaps)
+        return self._read_snapshots(snaps)
 
     def get_record(self, identifier) -> dict | None:
         """Point lookup by record identifier (reference ``get_record``).
 
-        Reads exactly one bucket's current snapshot directory (the
-        bucket is derived from the key on the driver); the key predicate
-        pushes down into that bucket's parquet row groups.
+        Reads exactly one bucket's current snapshot directory; the key
+        predicate pushes down into that bucket's parquet row groups. One
+        Spark job: the bucket is computed by ``_bucket_expr`` over a
+        one-row local frame, which Catalyst folds on the driver, and the
+        stored schema spares the read a footer job. No ``limit``: the
+        store holds one record per key, and a limit would scan again
+        when the first partition misses.
         """
         stored = self._stored_schema()
         if stored is None:
             return None
-        # xxhash64 is type-sensitive: the literal must carry the stored
-        # key type (lit(7) is int, a long key hashes differently).
+        # xxhash64 is type-sensitive: the key must carry the stored key
+        # type (an int literal hashes differently from a long key).
         key_type = stored[self.key].dataType
-        key_lit = F.lit(identifier).cast(key_type)
-        bucket = (
-            self.spark.range(1)
-            .select(F.pmod(F.xxhash64(key_lit), F.lit(self.n_buckets)))
-            .first()[0]
+        probe = local_rows(self.spark, [(0,)], "one int").select(
+            F.lit(identifier).cast(key_type).alias(self.key)
         )
+        bucket = probe.select(self._bucket_expr()).collect()[0][0]
         v = self._bucket_version(bucket)
         if v == 0:
             return None
         rows = (
-            self.spark.read.parquet(self._bucket_snapshot(bucket, v))
+            self._read_snapshots([self._bucket_snapshot(bucket, v)])
             .filter(F.col(self.key) == identifier)
-            .limit(1)
             .collect()
         )
         return rows[0].asDict() if rows else None

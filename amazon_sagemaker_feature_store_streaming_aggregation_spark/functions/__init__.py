@@ -1,5 +1,4 @@
-from .hashing import h64, h64_seeded, shingle_hashes  # noqa: F401
-from .stable import stabilize_doubles  # noqa: F401
+from .hashing import h64, shingle_hashes  # noqa: F401
 from .text import (  # noqa: F401
     LANG_STOPWORDS,
     with_fingerprint,

@@ -115,12 +115,6 @@ def minhash_perm_sql(var: str, a: int, b: int) -> str:
     return f"(({t} + {a} * ({var} % {HALF_MOD}) + {b}) % {MERSENNE_61})"
 
 
-def h64_seeded(col: Column | str, seed: int) -> Column:
-    """Seeded variant: hash of ``seed || ':' || s``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return h64(F.concat(F.lit(f"{seed}:"), c))
-
-
 def shingle_expr(text_col: str, k: int = 5) -> str:
     """SQL expression string for the character k-gram shingle hash set
     (array<bigint>) — THE single source of shingle semantics; both

@@ -3,7 +3,6 @@ from .sources import (  # noqa: F401
     drop_stale_records,
     kafka_value_projection,
     read_base64_json_event_stream,
-    read_kafka_event_stream,
     read_event_stream,
     read_json_event_stream,
 )

@@ -145,6 +145,9 @@ def _accumulate(batch, n0: int, c0: int):
 def _running_totals_fn(key, pdf_iter, state):
     import pandas as pd
 
+    from .sliding_agg import trim_zip_importer_cache
+
+    trim_zip_importer_cache()
     (n0, c0) = state.get if state.exists else (0, 0)
     batch = pd.concat(list(pdf_iter), ignore_index=True)
     out, n1, c1 = _accumulate(batch, n0, c0)

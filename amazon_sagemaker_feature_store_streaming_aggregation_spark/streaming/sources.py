@@ -105,39 +105,6 @@ def kafka_value_projection(raw: DataFrame) -> DataFrame:
     )
 
 
-def read_kafka_event_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-    **options: str,
-) -> DataFrame:
-    """S1/S6: the production message-bus source — ``readStream.format
-    ("kafka")`` with the identical downstream plan as the file sources.
-
-    The reference consumes a Kinesis stream from its KDA app and
-    Lambdas (``notebooks/1_setup.ipynb:364,487-510``); Kafka is the
-    Spark-native equivalent with first-party connector support.
-    ``starting_offsets`` is the reference's start-positioning knob
-    (``LATEST`` / ``TRIM_HORIZON`` -> ``latest`` / ``earliest`` / a
-    per-partition offset JSON). Extra ``options`` pass through to the
-    reader (e.g. ``maxOffsetsPerTrigger`` for backpressure).
-
-    Requires the ``spark-sql-kafka`` connector package on the
-    classpath; the projection (:func:`kafka_value_projection`) is
-    plan-tested without a broker.
-    """
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return kafka_value_projection(reader.load())
-
-
 def drop_stale_records(
     events: DataFrame,
     ts_col: str = "ts",

@@ -4,16 +4,15 @@ The reference wires KDA output through a Lambda that ``put_record``s
 each row into the online store
 (``src/lambda/StreamingIngestAggFeatures/lambda_function.py:25-32``),
 relying on Kinesis acks for at-least-once delivery. Spark-natively this
-is ``writeStream.foreachBatch``: each micro-batch is reduced to its
-latest row per key (cheap window over the batch — typically tiny) and
-merged into the FeatureGroup; the checkpoint directory supplies the
-restart/redelivery guarantees the ack protocol provided.
+is ``writeStream.foreachBatch``: each micro-batch is merged into the
+FeatureGroup in one pass (the store's merge keeps the latest row per
+key); the checkpoint directory supplies the restart/redelivery
+guarantees the ack protocol provided.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..featurestore import FeatureGroup
@@ -28,35 +27,22 @@ def start_stream_upsert(
 ) -> StreamingQuery:
     """Continuously upsert a keyed aggregate stream into ``fg``.
 
-    The per-batch reduction (latest row per key *within the batch*)
-    keeps the store merge O(keys-in-batch), not O(events-in-batch).
+    Each micro-batch goes to :meth:`FeatureGroup.upsert` as it is, with
+    ``ts`` renamed to the store's event-time column. The store's merge
+    keeps the latest row per key with a deterministic all-columns
+    tie-break, so the batch needs no reduction of its own, and an empty
+    batch touches no bucket and leaves the store as it is.
     """
-    key = fg.key
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
         # persist: foreachBatch re-executes the batch plan PER ACTION,
-        # and this function runs two (the emptiness probe and the
-        # upsert's write) — without the cache an upstream stateful
+        # and the upsert runs two (the touched-bucket collect and the
+        # merge write) — without the cache an upstream stateful
         # aggregate would pay its shuffle + Python state work twice
         # every trigger.
         batch_df.persist()
         try:
-            if batch_df.isEmpty():  # empty triggers must not touch the store
-                return
-            # deliberately NOT operators/latest_per_key (dense_rank,
-            # reference tie-keeping semantics): this is only a batch-size
-            # pre-reduction — FeatureGroup.upsert applies the store's own
-            # deterministic all-columns tie policy right after, so ties
-            # here resolve there, and keeping ties would just upsert more
-            # rows for the merge to collapse
-            w = Window.partitionBy(key).orderBy(F.col(ts).desc())
-            latest = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-                .withColumnRenamed(ts, fg.event_time)
-            )
-            fg.upsert(latest)
+            fg.upsert(batch_df.withColumnRenamed(ts, fg.event_time))
         finally:
             batch_df.unpersist()
 

@@ -1472,7 +1472,7 @@ def _q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GOPHER_RULES_ORACLE = """
 WITH base AS (
   SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(text), '\s+'),
+         list_filter(regexp_split_to_array(trim(text), '\\s+'),
                      t -> t != '') AS toks,
          list_filter(list_transform(regexp_split_to_array(text, '\n'),
                                     l -> trim(l)),
@@ -1499,10 +1499,10 @@ WITH base AS (
               l -> regexp_matches(l, '^[-*]'))) AS BIGINT)
            AS n_bullet_lines,
          CAST(len(list_filter(lns,
-              l -> regexp_matches(l, '\.{3,}$'))) AS BIGINT)
+              l -> regexp_matches(l, '\\.{3,}$'))) AS BIGINT)
            AS n_ellipsis_lines,
          CAST(length(text) - length(replace(text, '#', ''))
-              + len(regexp_extract_all(text, '\.{3,}'))
+              + len(regexp_extract_all(text, '\\.{3,}'))
               AS BIGINT) AS n_symbols
   FROM base
 )

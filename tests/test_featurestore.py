@@ -648,3 +648,112 @@ def test_change_feed_cursor_outside_retention_raises(spark, tmp_path):
     # a cursor still inside retention works
     rows = fg.change_feed_df(since={0: 2}).collect()
     assert {r["_commit_version"] for r in rows} == {3}
+
+
+def _count_jobs(spark, fn):
+    """(fn's result, the number of Spark jobs it ran), counted by a job
+    group set on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_store_reads_and_live_upsert_job_counts(spark, fg):
+    """The per-trigger store work of the live loop has a fixed Spark-job
+    cost: a point read is one scan job (the bucket is folded on the
+    driver, the stored schema spares a footer job, no limit re-scan),
+    building a snapshot frame runs none, and an upsert into a live
+    store runs 4 (the touched-bucket collect and the merge write, each
+    a shuffle-map job plus its result job). A schema-merging or
+    inferring read, or routing the key through a ``range`` job, adds
+    at least one."""
+    t0 = dt.datetime(2024, 1, 1)
+    fg.upsert(_df(spark, [(i, float(i), t0) for i in range(40)]))
+    assert all(fg._bucket_version(b) == 1 for b in range(fg.n_buckets))
+
+    rec, n = _count_jobs(spark, lambda: fg.get_record(7))
+    assert rec["avg_amt"] == 7.0 and n == 1
+    rec, n = _count_jobs(spark, lambda: fg.get_record(12345))
+    assert rec is None and n == 1
+    _, n = _count_jobs(spark, fg.get_latest)
+    assert n == 0
+    cursor = fg.version_map()
+    _, n = _count_jobs(spark, lambda: fg.snapshot_at(cursor))
+    assert n == 0
+
+    later = _df(spark, [(i, float(i) + 1, t0 + dt.timedelta(hours=1)) for i in range(0, 40, 3)])
+    _, n = _count_jobs(spark, lambda: fg.upsert(later))
+    assert n == 4
+    assert fg.get_record(3)["avg_amt"] == 4.0
+
+
+def test_reads_fill_columns_missing_from_older_buckets(spark, fg):
+    """A later upsert adds a column and touches one bucket, so the other
+    buckets' files lack it. get_latest, get_record, snapshot_at and the
+    next merge read it as NULL there: the rows a footer-merging
+    (``mergeSchema``) read of the same snapshots gives. Without the
+    stored schema a snapshot read raises."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    def rows(df):
+        return sorted((r.asDict() for r in df.collect()), key=lambda r: r["cc_num"])
+
+    def footer_merged():
+        return spark.read.option("mergeSchema", "true").parquet(*fg._live_snapshots())
+
+    t0 = dt.datetime(2024, 1, 1)
+    keys = list(range(12))
+    fg.upsert(_df(spark, [(k, float(k), t0) for k in keys]))
+    bucket_of = dict(
+        spark.createDataFrame([(k,) for k in keys], "cc_num long")
+        .select("cc_num", fg._bucket_expr())
+        .collect()
+    )
+    wide = "cc_num long, avg_amt double, n_tx int, trans_time timestamp"
+    fg.upsert(spark.createDataFrame([(5, 50.0, 3, t0 + dt.timedelta(hours=1))], wide))
+    old = [k for k in keys if bucket_of[k] != bucket_of[5]]
+    old_buckets = {bucket_of[k] for k in old}
+    assert len(old_buckets) == fg.n_buckets - 1
+    for b in old_buckets:
+        files = glob.glob(
+            os.path.join(fg._bucket_snapshot(b, fg._bucket_version(b)), "*.parquet")
+        )
+        assert files and all("n_tx" not in pq.read_schema(f).names for f in files)
+
+    latest = rows(fg.get_latest())
+    assert latest == rows(footer_merged())
+    assert {r["cc_num"]: r["n_tx"] for r in latest} == {
+        k: 3 if k == 5 else None for k in keys
+    }
+    assert rows(fg.snapshot_at(fg.version_map())) == latest
+    k = old[0]
+    assert fg.get_record(k) == {"cc_num": k, "avg_amt": float(k), "n_tx": None, "trans_time": t0}
+
+    # the next merge into an old bucket keeps the column, NULL or set
+    k2 = next(x for x in old if bucket_of[x] != bucket_of[k])
+    fg.upsert(_df(spark, [(k, 99.0, t0 + dt.timedelta(hours=2))]))
+    fg.upsert(spark.createDataFrame([(k2, 7.0, 8, t0 + dt.timedelta(hours=2))], wide))
+    assert fg.get_record(k) == {
+        "cc_num": k, "avg_amt": 99.0, "n_tx": None, "trans_time": t0 + dt.timedelta(hours=2)
+    }
+    assert fg.get_record(k2)["n_tx"] == 8
+    latest = rows(fg.get_latest())
+    assert latest == rows(footer_merged())
+    assert len(latest) == len(keys)
+
+    os.remove(fg._schema_file())
+    with pytest.raises(ValueError, match="_SCHEMA.json is missing"):
+        fg.get_latest()

@@ -266,6 +266,55 @@ def test_bucket_ring_state_is_bounded_by_window():
     assert count[0] == 100_001
 
 
+def test_trim_zip_importer_cache_drops_only_sub_path_importers(tmp_path):
+    """The state workers' cache trim removes the zipimporters of
+    sub-packages inside an archive (each one re-reads the whole archive
+    on every ``importlib.invalidate_caches()``) and keeps the archive's
+    own importer; a later fresh import from the archive still works."""
+    import importlib
+    import os
+    import sys
+    import zipfile
+    import zipimport
+
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.streaming.sliding_agg import (
+        trim_zip_importer_cache,
+    )
+
+    archive = str(tmp_path / "zpkg_archive.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpkg/__init__.py", "")
+        z.writestr("zpkg/sub/__init__.py", "")
+        z.writestr("zpkg/sub/mod.py", "VALUE = 1\n")
+        z.writestr("zpkg/other/__init__.py", "")
+        z.writestr("zpkg/other/mod.py", "VALUE = 2\n")
+    sub_paths = [os.path.join(archive, "zpkg"), os.path.join(archive, "zpkg", "sub")]
+    sys.path.insert(0, archive)
+    try:
+        assert importlib.import_module("zpkg.sub.mod").VALUE == 1
+        cache = sys.path_importer_cache
+        for p in [archive, *sub_paths]:
+            assert isinstance(cache.get(p), zipimport.zipimporter), p
+        others = {
+            p: f
+            for p, f in cache.items()
+            if not isinstance(f, zipimport.zipimporter)
+        }
+
+        trim_zip_importer_cache()
+
+        assert isinstance(cache.get(archive), zipimport.zipimporter)
+        assert not any(p in cache for p in sub_paths)
+        assert all(cache.get(p) is f for p, f in others.items())
+        assert importlib.import_module("zpkg.other.mod").VALUE == 2
+    finally:
+        sys.path.remove(archive)
+        for name in [m for m in sys.modules if m == "zpkg" or m.startswith("zpkg.")]:
+            del sys.modules[name]
+        for p in [p for p in sys.path_importer_cache if p.startswith(archive)]:
+            del sys.path_importer_cache[p]
+
+
 def test_windowed_approximation_semantics(spark):
     t0 = dt.datetime(2024, 1, 1, 0, 0, 30)
     rows = [
