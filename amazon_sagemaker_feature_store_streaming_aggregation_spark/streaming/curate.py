@@ -60,17 +60,39 @@ at-least-once, batch-id idempotent via the REQUIRED durable
 checkpoint, index-append-after-output-commit with retry-time repair,
 pending erasure tombstones filtered at every probe and append
 (``streaming/forget.py``).
+
+Per-trigger action sequence of a fresh batch (near stage on; every
+intermediate is computed once):
+
+1. score, cut and within-batch dedup into ``batch_best``, banded into
+   ``batch_bands`` (both lazy checkpoints);
+2. ONE collect gives both prune lists, the band index's buckets and the
+   hash index's. The hash list is ``batch_best``'s before the near drop:
+   a superset of the survivors' buckets, safe because the prune is
+   coarse and the exact anti-join matches on ``text_hash``;
+3. the near decisions: one checkpointed row per batch ``(id, band,
+   bhash)`` with the band value's smallest holder and an
+   already-indexed flag; the batch's fresh band rows and the near drop
+   are filters of it;
+4. ``fresh``: the survivors not in the hash index, with their shard;
+5. two overlapped writes, ``kept/`` and ``bands/``;
+6. ``_SUCCESS``;
+7. two order-free index appends, hash and band.
+
+Without the near stage, steps 2-3 shrink to the hash prune collect and
+step 5 to the ``kept`` write, whose own ``_SUCCESS`` commits the batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import h64
 from .dedup import (
     _append_index,
     _assert_modulus_unchanged,
+    _collect_bucket_lists,
     _collect_buckets,
     _fs_exists,
     _index_bucket,
@@ -291,10 +313,18 @@ def run_curate_stream(
         # anti-join, the output write and the index append all start
         # from a flat LogicalRDD instead of re-analyzing the
         # score+hash lineage per action; the first bucket collect is
-        # the materializing action
+        # the materializing action. With the near stage on, the group
+        # shuffle is an explicit keyed one at full parallelism: it
+        # satisfies the groupBy's clustering and leaves the MinHash
+        # projection enough partitions that ``_parallelize_scan``
+        # passes it through — one exchange instead of two.
         best_cols = [F.col(id_col), F.col("lm_score")] + (
             [F.col(text_col)] if near_index_dir else []
         )
+        if near_index_dir:
+            kept = kept.repartition(
+                spark.sparkContext.defaultParallelism, "text_hash"
+            )
         batch_best = (
             kept.groupBy("text_hash")
             .agg(F.min(F.struct(*best_cols)).alias("__m"))
@@ -308,12 +338,14 @@ def run_curate_stream(
             .localCheckpoint(eager=False)
         )
         fresh_bands = None
-        if near_index_dir:
+        if not near_index_dir:
+            hash_buckets = _collect_buckets(batch_best, nb, "text_hash")
+        else:
             # ---- NEAR stage: min-id band-collision dedup vs the
             # persistent band index of every gate-passer so far.
-            # ONE signature+banding pass, eagerly checkpointed: the
-            # bucket collect, the probe, the min fold, the batch
-            # artifact and the append all reuse the flat rows.
+            # ONE signature+banding pass, lazily checkpointed: the
+            # bucket collect, the probe and the min fold reuse the
+            # flat rows.
             batch_bands = band_rows(
                 minhash_signatures(
                     batch_best, text_col, id_col, num_hashes
@@ -322,66 +354,81 @@ def run_curate_stream(
                 bands,
                 rows_per_band,
             ).localCheckpoint(eager=False)
+            # ONE collect serves both prune lists. The hash list is
+            # taken BEFORE the near drop: a superset of the surviving
+            # docs' buckets, and a safe one — the prune is coarse and
+            # the exact anti-join matches on text_hash, so an extra
+            # bucket adds scan I/O, never rows.
+            band_buckets, hash_buckets = _collect_bucket_lists(
+                (batch_bands, bnb, ("band", "bhash")),
+                (batch_best, nb, ("text_hash",)),
+            )
             bidx = _read_index_pruned(
-                spark, near_index_dir,
-                _collect_buckets(batch_bands, bnb, "band", "bhash"),
+                spark, near_index_dir, band_buckets,
                 nonempty_memo=_resolved_near,
             )
-            if bidx is None:
-                gmin = batch_bands.groupBy("band", "bhash").agg(
-                    F.min(id_col).alias("__gmin")
-                )
-                cand_rows = batch_bands.join(gmin, ["band", "bhash"])
-            else:
+            holders = batch_bands.select(
+                id_col, "band", "bhash", F.lit(True).alias("__mine")
+            )
+            if bidx is not None:
                 # the bucket prune is coarse; narrow the probed rows to
-                # the batch's band values once, then fold index mins
-                # and within-batch mins into one per-(band, bhash) min
-                # no distinct on the prune side: a left-semi join is
-                # duplicate-insensitive
-                touched = bidx.join(
-                    batch_bands.select("band", "bhash"),
-                    ["band", "bhash"],
-                    "left_semi",
+                # the batch's band values before they meet the batch
+                # (no distinct on the prune side: a left-semi join is
+                # duplicate-insensitive)
+                holders = holders.unionByName(
+                    bidx.join(
+                        batch_bands.select("band", "bhash"),
+                        ["band", "bhash"],
+                        "left_semi",
+                    ).select(
+                        id_col, "band", "bhash", F.lit(False).alias("__mine")
+                    )
                 )
-                gmin = (
-                    batch_bands.select(id_col, "band", "bhash")
-                    .unionByName(touched.select(id_col, "band", "bhash"))
-                    .groupBy("band", "bhash")
-                    .agg(F.min(id_col).alias("__gmin"))
+            # ONE decision row per batch (id, band, bhash), from ONE
+            # shuffle on the band value: __gmin is the value's smallest
+            # holder across the index and the batch, __held marks a row
+            # the index already holds (a redelivered doc's whole band
+            # set, or the min-winning overlap of a re-ingest — it must
+            # not re-append, the LSH runner's partial-match rule).
+            # Checkpointed: the band artifact, the band append and the
+            # near drop are all filters of the same materialized rows.
+            decided = (
+                holders.repartition("band", "bhash")
+                .groupBy("band", "bhash", id_col)
+                .agg(
+                    F.max("__mine").alias("__mine"),
+                    (~F.min("__mine")).alias("__held"),
                 )
-                # rows the index already holds (a redelivered doc's
-                # whole band set, or the min-winning overlap of a
-                # re-ingest) must not re-append — the LSH runner's
-                # partial-match rule
-                cand_rows = batch_bands.join(
-                    touched, on=[id_col, "band", "bhash"], how="left_anti"
-                ).join(gmin, ["band", "bhash"])
+                .withColumn(
+                    "__gmin",
+                    F.min(id_col).over(Window.partitionBy("band", "bhash")),
+                )
+                .where(F.col("__mine"))
+                .localCheckpoint(eager=False)
+            )
             # only MIN-WINNING rows append: a row whose band value
             # already has a smaller-id holder can never win a future
             # per-band min (drop decisions test `holder < id`, and
             # min_at_arrival < p < f chains), so indexing it is dead
             # weight — the index stays O(distinct band values), not
             # O(gate-passers x bands); an exact re-copy of an indexed
-            # doc appends nothing at all. Checkpointed with the bucket
-            # column attached: the batch artifact write and the index
-            # append read the SAME materialized rows (no read-back)
+            # doc appends nothing at all. The bucket column rides
+            # along: the batch artifact write and the index append
+            # read the SAME materialized rows (no read-back)
             fresh_bands = (
-                cand_rows.where(F.col(id_col) == F.col("__gmin"))
+                decided.where(
+                    ~F.col("__held") & (F.col(id_col) == F.col("__gmin"))
+                )
                 .select(id_col, "band", "bhash")
                 .withColumn("ibucket", _index_bucket(bnb, "band", "bhash"))
-                .localCheckpoint(eager=False)
             )
             # no distinct: consumed by a left-anti join only
-            near_drop = (
-                batch_bands.join(gmin, ["band", "bhash"])
-                .where(F.col("__gmin") < F.col(id_col))
-                .select(id_col)
-            )
+            near_drop = decided.where(
+                F.col("__gmin") < F.col(id_col)
+            ).select(id_col)
             batch_best = batch_best.join(near_drop, id_col, "left_anti")
         idx = _read_index_pruned(
-            spark, index_dir,
-            _collect_buckets(batch_best, nb, "text_hash"),
-            nonempty_memo=_resolved,
+            spark, index_dir, hash_buckets, nonempty_memo=_resolved,
         )
         fresh = batch_best if idx is None else batch_best.join(
             idx.select("text_hash"), on="text_hash", how="left_anti"

@@ -30,7 +30,6 @@ infinite stream is impossible by construction, which is why the batch
 
 from __future__ import annotations
 
-import os as _os
 import threading
 from collections.abc import Sequence
 
@@ -39,22 +38,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import h64
 from ..session import local_rows
-
-_STREAM_DEBUG = _os.environ.get("SPARK_GRAFT_STREAM_DEBUG") == "1"
-
-
-def _tick(t0: list, label: str) -> None:
-    """Dev-only section timer for the streaming runners: prints the
-    elapsed time since the previous tick when
-    ``SPARK_GRAFT_STREAM_DEBUG=1`` (off in production — zero cost
-    beyond one env read at import)."""
-    if _STREAM_DEBUG:
-        import time
-
-        t = time.time()
-        print(f"## {label}: {t - t0[0]:.2f}s", flush=True)
-        t0[0] = t
-
 
 
 def dedup_stream_exact(
@@ -286,10 +269,12 @@ def _resolve_live_modulus(
         # earlier in the same batch and spuriously fail its later
         # _assert_modulus_unchanged. The non-emptiness memo is popped
         # too — it describes partition dirs of the pre-flip layout
-        # (cheap: it can only re-run the O(dirs) listing once).
+        # (cheap: it can only re-run the O(dirs) listing once) — and so
+        # is the memoized read schema (re-inferred by one footer job).
         resolved.pop(key, None)
         resolved.pop(sig_key, None)
         resolved.pop("nonempty", None)
+        resolved.pop("schema", None)
         n_buckets = None
     resolved[key] = ens(spark, store_dir, n_buckets)
     resolved[sig_key] = _meta_signature(spark, store_dir)
@@ -327,16 +312,22 @@ def _read_index_pruned(
     ``"nonempty"``: once the index has data the answer can never go
     back to False, so the O(n_buckets) directory listing runs only
     while the index is actually empty (cheap — nothing to list) and
-    once when it first turns non-empty."""
+    once when it first turns non-empty.
+
+    The memo also keeps the index's read schema under ``"schema"``:
+    inferring it reads parquet footers in a Spark job, once per read
+    without the memo and once per layout with it (a re-bucket drops it
+    with the other layout facts, :func:`_resolve_live_modulus`)."""
     if not buckets:
         return None
-    if nonempty_memo is not None:
-        if not nonempty_memo.get("nonempty"):
-            nonempty_memo["nonempty"] = _index_nonempty(spark, index_dir)
-        if not nonempty_memo["nonempty"]:
-            return None
-    elif not _index_nonempty(spark, index_dir):
+    memo = {} if nonempty_memo is None else nonempty_memo
+    if not memo.get("nonempty"):
+        memo["nonempty"] = _index_nonempty(spark, index_dir)
+    if not memo["nonempty"]:
         return None
+    base = index_dir.rstrip("/")
+    if "schema" not in memo:
+        memo["schema"] = spark.read.parquet(base).schema
     from .forget import apply_index_tombstones
 
     # pending erasure tombstones (streaming/forget.py) anti-join every
@@ -345,7 +336,7 @@ def _read_index_pruned(
     return apply_index_tombstones(
         spark,
         index_dir,
-        spark.read.parquet(index_dir.rstrip("/"))
+        spark.read.schema(memo["schema"]).parquet(base)
         .where(F.col("ibucket").isin([int(b) for b in buckets]))
         .drop("ibucket"),
     )
@@ -407,12 +398,25 @@ def _collect_buckets(rows: DataFrame, n_buckets: int, *key_cols) -> list:
     """Distinct index buckets of ``rows``' keys — at most ``n_buckets``
     ints on the driver (a constant, not data-sized): the prune list a
     probe read passes to :func:`_read_index_pruned`."""
-    return [
-        r[0]
-        for r in rows.select(_index_bucket(n_buckets, *key_cols).alias("b"))
-        .distinct()
-        .collect()
-    ]
+    return _collect_bucket_lists((rows, n_buckets, key_cols))[0]
+
+
+def _collect_bucket_lists(*probes) -> list:
+    """The prune lists of several probes, each ``(rows, n_buckets,
+    key_cols)``, in ONE driver action: a runner probing two indexes pays
+    one collect, not one per index. Returns one list per probe, in
+    order (see :func:`_collect_buckets`)."""
+    tagged = None
+    for i, (rows, n_buckets, key_cols) in enumerate(probes):
+        t = rows.select(
+            F.lit(i).alias("p"),
+            _index_bucket(n_buckets, *key_cols).alias("b"),
+        )
+        tagged = t if tagged is None else tagged.unionByName(t)
+    out = [[] for _ in probes]
+    for r in tagged.distinct().collect():
+        out[r[0]].append(r[1])
+    return out
 
 
 def _run_independent(*thunks) -> None:
@@ -728,6 +732,7 @@ def run_index_dedup_stream(
             idx = _read_index_pruned(
                 spark, index_dir,
                 _collect_buckets(batch_best, nb, "text_hash"),
+                nonempty_memo=_resolved,
             )
             # the dedup_append anti-join over the PERSISTED batch_best
             # (recomputing it inside dedup_append would re-run the md5
@@ -1929,9 +1934,6 @@ def run_cluster_maintain_stream(
     _resolved: dict = {}
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        import time
-
-        t0 = [time.time()]
         spark = batch_df.sparkSession
         base = out_dir.rstrip("/")
         # pin/validate the bucket moduli against the store's and the
@@ -1939,16 +1941,13 @@ def run_cluster_maintain_stream(
         # listStatus each, so an online re-bucket between triggers is
         # ADOPTED (full keys ride every row; re-routing is lossless)
         # instead of appends landing in old-modulus dirs
-        _tick(t0, f"b{batch_id} process-entry")
         nb = _resolve_live_modulus(
             spark, base, n_buckets, _resolved,
             key="n_buckets", ensure=_ensure_store_buckets,
         )
-        _tick(t0, f"b{batch_id} ensure-store")
         inb = _resolve_live_modulus(
             spark, index_dir, nb, _resolved, key="inb"
         )
-        _tick(t0, f"b{batch_id} ensure-meta")
         batch_out = base + f"/batch={batch_id}"
         fps_out = batch_out + "/fps"
         edge_fp = batch_df.select(id_col, hash_col).where(
@@ -1998,13 +1997,11 @@ def run_cluster_maintain_stream(
         batch_bands = hamming_band_rows(
             edge_fp, id_col, hash_col, bands, width
         )
-        _tick(t0, f"b{batch_id} success-check+fp-checkpoint")
         idx = _read_index_pruned(
             spark, index_dir,
             _collect_buckets(batch_bands, inb, "band", "bv"),
             nonempty_memo=_resolved,
         )
-        _tick(t0, f"b{batch_id} bucket-collect+index-read")
         cross = None
         if idx is None:
             # cold index: nothing indexed means nothing redelivered
@@ -2104,7 +2101,6 @@ def run_cluster_maintain_stream(
                 .distinct()
                 .collect()
             ]
-            _tick(t0, f"b{batch_id} want-collect")
             store_doc = _read_store_side(
                 spark, base, "doc", through, prior_batches, buckets=want
             )
@@ -2146,7 +2142,6 @@ def run_cluster_maintain_stream(
                 .distinct()
                 .collect()
             ]
-        _tick(t0, f"b{batch_id} cwant-collect")
         members = None
         if cwant:
             store_cluster = _read_store_side(
@@ -2181,7 +2176,6 @@ def run_cluster_maintain_stream(
         # a pure-redelivery batch folds to an EMPTY delta — skip
         # both projection writes outright (readers treat a
         # committed batch with no delta dirs as a no-op)
-        _tick(t0, f"b{batch_id} delta-build+isEmpty")
         _assert_modulus_unchanged(spark, base, _resolved, key="n_buckets")
         if not delta.isEmpty():
             # pre-write layout control, two regimes: the standing
@@ -2234,10 +2228,8 @@ def run_cluster_maintain_stream(
                 ),
                 lambda: new_fp.write.mode("overwrite").parquet(fps_out),
             )
-            _tick(t0, f"b{batch_id} delta+fps-writes")
         else:
             new_fp.write.mode("overwrite").parquet(fps_out)
-            _tick(t0, f"b{batch_id} fps-write")
         _touch_success(spark, batch_out)
         # band rows re-derive from the SAME checkpointed new_fp
         # the committed artifact was written from, so the index
@@ -2250,7 +2242,6 @@ def run_cluster_maintain_stream(
             index_dir,
             small_batch=broadcast_batch,
         )
-        _tick(t0, f"b{batch_id} index-append")
         if compact_every and len(prior_batches) + 1 >= compact_every:
             compact_cluster_store(
                 spark, base, id_col=id_col, n_buckets=nb

@@ -580,3 +580,214 @@ def test_curate_clf_gate_orderings(spark, tmp_path):
         .select("doc_id").distinct().collect()
     }
     assert 1 not in idx_ids and 2 in idx_ids
+
+
+def _curate_fixture(spark, tmp_path, rows):
+    """Reference LM model over ``rows``' texts and a cutoff every one of
+    them passes (the gate is not under test here)."""
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.operators.lm import (
+        lm_transition_scores,
+    )
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.streaming import (
+        write_lm_model,
+    )
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.streaming.quality import (
+        read_lm_model,
+    )
+
+    docs = spark.createDataFrame(rows, SCHEMA)
+    model_dir = str(tmp_path / "model")
+    write_lm_model(docs, model_dir)
+    scores = lm_transition_scores(docs, model=read_lm_model(spark, model_dir))
+    cutoff = min(r["lm_score"] for r in scores.collect())
+    return model_dir, cutoff
+
+
+def _curate_near(stream, base, model_dir, cutoff, available_now=True):
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.streaming import (
+        run_curate_stream,
+    )
+
+    return run_curate_stream(
+        stream, os.path.join(base, "out"), os.path.join(base, "index"),
+        checkpoint_dir=os.path.join(base, "ckpt"), model_dir=model_dir,
+        cutoff=cutoff, n_buckets=4, near_index_dir=os.path.join(base, "near"),
+        available_now=available_now,
+    )
+
+
+def test_curate_retry_repairs_both_index_appends(spark, tmp_path):
+    """Crash window after the commit: batch 1's ``kept/`` and ``bands/``
+    and its ``_SUCCESS`` are on disk, its two index appends are not. The
+    redelivered batch takes the retry branch and both indexes gain
+    exactly the committed rows (the same indexes an uninterrupted run
+    builds); a second redelivery appends nothing. The committed
+    ``bands/`` artifact is pinned too: exactly the batch's min-winning
+    band rows (a row whose band value no smaller-id gate-passer holds)."""
+    import shutil
+
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.operators.dedup import (
+        band_rows,
+        minhash_signatures,
+    )
+
+    A = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+         "lamda mu nu xi omicron pi rho sigma tau upsilon")
+    B = A.replace("gamma", "changedone")  # near copy of A
+    D = ("one two three four five six seven eight nine ten "
+         "eleven twelve thirteen fourteen fifteen sixteen")
+    E = ("red orange yellow green blue indigo violet black white "
+         "grey brown pink cyan magenta teal olive")
+    rows0 = [(1, A), (2, D)]
+    # 3 near-drops against 1, 5 is an exact copy of 2, 4 is new
+    rows1 = [(3, B), (4, E), (5, D)]
+    model_dir, cutoff = _curate_fixture(spark, tmp_path, rows0 + rows1)
+
+    d = tmp_path / "stream"
+    _one_file(spark, d, "00.parquet", rows0, SCHEMA)
+    crashed = str(tmp_path / "crashed")
+    clean = str(tmp_path / "clean")
+
+    def _run(base):
+        stream = (
+            spark.readStream.format("parquet").schema(SCHEMA)
+            .option("maxFilesPerTrigger", 1).load(str(d))
+        )
+        assert _curate_near(stream, base, model_dir, cutoff).awaitTermination(240)
+
+    def _rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    _run(crashed)
+    shutil.copytree(crashed, clean)
+    _one_file(spark, d, "01.parquet", rows1, SCHEMA)
+    _run(clean)
+    batch1 = os.path.join(clean, "out", "batch=1")
+    assert {r[0] for r in _rows(batch1 + "/kept")} == {4}
+
+    sigs = band_rows(
+        minhash_signatures(spark.createDataFrame(rows0 + rows1, SCHEMA))
+    ).collect()
+    holders = {}
+    for r in sigs:
+        key = (r["band"], r["bhash"])
+        holders[key] = min(holders.get(key, r["doc_id"]), r["doc_id"])
+    want_bands = sorted(
+        (r["doc_id"], r["band"], r["bhash"]) for r in sigs
+        if r["doc_id"] >= 3 and holders[(r["band"], r["bhash"])] == r["doc_id"]
+    )
+    assert _rows(batch1 + "/bands") == want_bands
+    assert {i for i, _, _ in want_bands} == {3, 4}  # 3's unshared bands too
+
+    # the crash: batch 1 committed, neither index append made
+    before = {ix: _rows(os.path.join(crashed, ix)) for ix in ("index", "near")}
+    planted = os.path.join(crashed, "out", "batch=1")
+    shutil.copytree(batch1, planted)
+    files = sorted(os.listdir(planted + "/kept") + os.listdir(planted + "/bands"))
+    _run(crashed)
+    # the retry branch only reads the committed artifacts
+    assert sorted(os.listdir(planted + "/kept") + os.listdir(planted + "/bands")) == files
+    for ix in ("index", "near"):
+        got = _rows(os.path.join(crashed, ix))
+        assert got == _rows(os.path.join(clean, ix))
+        assert len(got) > len(before[ix])
+    assert len(_rows(os.path.join(crashed, "near"))) == len(before["near"]) + len(want_bands)
+
+    # redeliver batch 1 once more (its commit-log entry lost): the
+    # retry branch runs again and appends nothing
+    commits = os.path.join(crashed, "ckpt", "commits")
+    os.remove(os.path.join(commits, "1"))
+    if os.path.exists(os.path.join(commits, ".1.crc")):
+        os.remove(os.path.join(commits, ".1.crc"))
+    _run(crashed)
+    for ix in ("index", "near"):
+        assert _rows(os.path.join(crashed, ix)) == _rows(os.path.join(clean, ix))
+
+
+def test_curate_near_trigger_job_count(spark, tmp_path):
+    """A steady-state near-stage curation trigger has a fixed Spark-job
+    cost: at most 20 jobs on the ``foreachBatch`` thread (44 before
+    both prune lists came from one collect, the near decisions from one
+    checkpoint and index reads from a memoized schema, here and on the
+    ``curate_stream`` benchmark shape alike). The only
+    ``parquet`` job is the ``kept/`` write: an index read infers no
+    schema once the runner has read that index, and a memoized read
+    runs no job at all."""
+    import numpy as np
+
+    from amazon_sagemaker_feature_store_streaming_aggregation_spark.streaming.dedup import (
+        _read_index_pruned,
+    )
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(30)]
+    texts = []
+    for i in range(90):
+        if i > 5 and i % 7 == 0:
+            texts.append(texts[int(rng.integers(0, i))])  # exact copy
+        elif i > 5 and i % 5 == 0:
+            words = texts[int(rng.integers(0, i))].split()
+            words[0] = "edit"
+            texts.append(" ".join(words))  # near copy
+        else:
+            texts.append(" ".join(rng.choice(vocab, int(rng.integers(10, 30)))))
+    rows = list(enumerate(texts))
+    model_dir, cutoff = _curate_fixture(spark, tmp_path, rows)
+
+    d = tmp_path / "stream"
+    os.makedirs(d)
+
+    def _release(name, part):
+        # written elsewhere, then renamed in: the running source never
+        # sees a half-written file
+        _one_file(spark, tmp_path / "staging", name, part, SCHEMA)
+        os.rename(tmp_path / "staging" / name, d / name)
+
+    _release("00.parquet", rows[:30])
+    stream = (
+        spark.readStream.format("parquet").schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1).load(str(d))
+    )
+    base = str(tmp_path / "run")
+    q = _curate_near(stream, base, model_dir, cutoff, available_now=False)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        q.processAllAvailable()
+        # batch 1 reads the now non-empty indexes for the first time;
+        # batch 2 is the steady state
+        _release("01.parquet", rows[30:60])
+        q.processAllAvailable()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        seen = set(tracker.getJobIdsForGroup(q.runId))
+        _release("02.parquet", rows[60:])
+        q.processAllAvailable()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = set(tracker.getJobIdsForGroup(q.runId)) - seen
+    finally:
+        q.stop()
+    assert q.exception() is None
+    kept = spark.read.parquet(os.path.join(base, "out", "batch=2", "kept"))
+    assert kept.count() > 0
+
+    def names(jid):
+        return [tracker.getStageInfo(s).name for s in tracker.getJobInfo(jid).stageIds]
+
+    parquet_jobs = [j for j in jobs if any(n.startswith("parquet") for n in names(j))]
+    assert len(jobs) <= 20, sorted(jobs)
+    assert len(parquet_jobs) == 1, [names(j) for j in parquet_jobs]
+
+    memo: dict = {}
+    near = os.path.join(base, "near")
+    _read_index_pruned(spark, near, [0, 1], nonempty_memo=memo)
+    assert "schema" in memo
+    group = "curate-index-read"
+    sc.setJobGroup(group, group)
+    try:
+        bidx = _read_index_pruned(spark, near, [0, 1], nonempty_memo=memo)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup(group)) == 0
+    assert bidx.columns == ["doc_id", "band", "bhash"]
