@@ -2,46 +2,105 @@
 
 The missing pillar of the text-quality family next to the heuristic
 stats (``functions/text.py::with_text_stats``): score every document
-by how well its token transitions fit a reference corpus — the
-public CCNet/Gopher recipe (Wenzek et al., "CCNet: Extracting High
-Quality Monolingual Datasets from Web Crawl Data", arXiv:1911.00359)
-trains a small LM on trusted text and drops the worst-scoring web
-documents. Here the LM is an add-one-smoothed BIGRAM model trained
-either on the corpus itself (``reference=None``, the self-consistency
-variant: boilerplate/gibberish scores low against the corpus's own
-statistics) or on a trusted reference DataFrame.
+by how well its token n-grams fit a reference corpus — the public
+CCNet/Gopher recipe (Wenzek et al., "CCNet: Extracting High Quality
+Monolingual Datasets from Web Crawl Data", arXiv:1911.00359) trains a
+small LM on trusted text and drops the worst-scoring web documents
+(CCNet scores with a 5-gram KenLM). ONE model of order ``n`` serves
+every public order — 2 (:func:`lm_fit` / :func:`lm_transition_scores`),
+3 (``lm3_*``) and 5 (``lm5_*``) — trained on the corpus itself
+(``reference=None``, the self-consistency variant: boilerplate and
+gibberish score low against the corpus's own statistics), on a
+trusted reference DataFrame, or read back as a persisted ``model=``
+tuple of plain count tables (the standing-deployment shape,
+``streaming/quality.py``).
 
-Determinism contract (why this is a probability mean, not a log
-perplexity): ``ln`` is not correctly rounded and differs by ulps
-across engines/libms, which breaks the engine-vs-oracle value-hash
-gate this repo runs every round. Every arithmetic step here IS
-correctly rounded by IEEE 754 — integer counts, one exact int→double
-cast each, ONE division, ONE multiply, half-up round to an integer —
-so the score is bit-identical on any compliant engine. The per-token
-quantity is the smoothed transition probability
+The model. Per n-gram ``w1 .. wn`` each leg is an add-one-smoothed
+conditional probability, k = n..2, plus the unigram leg
 
-    p(w2 | w1) = (c(w1 w2) + 1) / (c(w1 ·) + V)
+    pk = (c(w_{n-k+1} .. wn) + 1) / (c(w_{n-k+1} .. w_{n-1} ·) + V)
+    p1 = (c(wn) + 1) / (N + V)
 
-quantized to ``round(p * QUANT)`` (bigint), and the doc score is the
-MEAN transition probability ``sum(qp) / n / QUANT`` — monotone in the
-same direction as negative cross-entropy for filtering purposes; a
-single-engine deployment that wants true log-perplexity swaps the
-quantized-p expression for ``ln`` at one marked line.
+(V = vocabulary size, N = token count), mixed by a FIXED-weight linear
+interpolation (Jelinek-Mercer) over the legs n..1:
+
+    order 2: (1, 0)             p = p2
+    order 3: (3, 2, 1) / 6      p = (3·p3 + 2·p2 + p1) / 6
+    order 5: (5, 4, 3, 2, 1) / 15
+
+— weight n..1 over their sum for n >= 3; the bigram is p2 alone, so
+its model has no unigram table (``vocab(v)`` instead of
+``uni``/``totals``). Interpolation with fixed λ rather than
+Katz/Kneser-Ney or EM-tuned λ because every term stays one correctly
+rounded operation (below). The higher orders add what bigram counts
+blur: word ORDER (order 3, pinned in tests/test_lm3.py) and long-range
+4-token templates (order 5, tests/test_lm5.py); an unseen top-order
+context contributes its uniform add-one floor while the observed
+lower legs still separate reference-like from scrambled text.
+
+Determinism contract (why a probability mean, not a log perplexity):
+``ln`` is not correctly rounded and differs by ulps across
+engines/libms, which breaks the engine-vs-oracle value-hash gate this
+repo runs every round. Every arithmetic step here IS correctly rounded
+by IEEE 754 — integer counts, one exact int→double cast per operand,
+one division per leg, one multiply per weight, one division by the
+weight sum, half-up round to an integer — so the score is
+bit-identical on any compliant engine. A zero-weight leg is not
+computed, a weight-1 leg is not multiplied, and weights summing to 1
+are not divided (each order's SQL is exactly its hand-written form).
+Each transition is quantized to ``qp = round(p * LM_QUANT)`` (bigint);
+the doc score is the MEAN ``sum(qp) / n / LM_QUANT`` — monotone in the
+same direction as negative cross-entropy for filtering purposes. A
+single-engine deployment that wants true log-perplexity or tuned λ
+swaps the expression at one marked line (:func:`_qp_sql`).
+
+Evidence rules: docs with fewer than ``n`` tokens (or NULL text) get
+count 0 and a NULL score — no evidence, not bad evidence; route them
+to the heuristic stats. Every doc row is preserved (left join back to
+``docs``), duplicate ids pool their n-grams into one score group, NULL
+ids ride through with NULL stats (null-unsafe join, the engine-wide
+rule). n-grams unseen in an external reference back off to count 0
+(the add-one floor), and an unseen context scores ``1 / V`` on its
+leg. Add-one artifact to know when setting cutoffs: an unseen
+CONTEXT's uniform ``1/V`` can exceed a frequent context's
+unseen-continuation floor ``1/(c(w1)+V)``, so fully-OOV gibberish is
+not guaranteed to score below shuffled common words — the reliable
+signal is reference-like transitions scoring far above both floors
+(pinned in the tests; Kneser-Ney/backoff swaps in at the same marked
+line). A reference with no tokens at all (V = 0) scores every
+transition at the uniform ceiling instead of dividing by zero.
 
 Tokenizer: the repo-wide whitespace convention (``functions/text.py::
 _TOKENS``), lower-cased — the same stream with_text_stats and the
 TF-IDF/BPE family consume, so scores compose with their outputs.
-Tokens contain no whitespace by construction, which makes
-``w1 || ' ' || w2`` an injective bigram key (the DuckDB oracle uses
-the identical spelling).
+Tokens contain no whitespace by construction, which makes the
+space-joined ``w1 .. wn`` an injective n-gram key from which
+``substring_index`` recovers every suffix and context exactly (the
+DuckDB oracles use the identical spelling with split_part/||).
 
-100 TB notes: bigram extraction is scan-side (``transform`` over the
-token array, whole-stage codegen); the model is two count aggregates
-(one shuffle each, map-side combined) over a table bounded by the
-distinct-bigram count; scoring joins the corpus bigram stream to
-those counts on the bigram key — natural-language bigram frequency is
-Zipfian, so AQE skew-join handles the "of the" keys; the vocabulary
-size is a single broadcast row. Nothing is ever collected.
+Plan shape by order. ``qp`` is a pure function of the n-gram string
+(every joined count keys off a suffix or prefix of it), so the count
+joins may run over distinct grams. Order 2 joins its two count legs on
+the per-occurrence gram stream: a 100-doc batch scored against a
+persisted model runs 7 Spark jobs in 1.2 s that way, against 10 jobs in
+1.9 s over distinct grams (4-core VM) — two joins do not repay the
+distinct, pre-aggregation and attach shuffles. Order >= 3 joins its
+2n-1 count legs over the DISTINCT grams (self-trained: the top-order
+count table, whose keys are exactly the corpus grams, so no distinct
+pass and no top-count join), then attaches ``qp`` to one ``(id, gram)``
+occurrence pre-aggregation and sums multiplicity x qp — exact integer
+arithmetic, the same sum — so the long join chain reads each gram once
+however often the corpus repeats it. (On the sf0.1 fixture, where
+5-grams rarely repeat, the two shapes time within host noise of each
+other: self-trained order 5, best-of-3 7.2–8.9 s distinct against
+6.6–8.6 s per occurrence, four runs each, 4-core VM.)
+
+100 TB notes: n-gram extraction is scan-side (``transform`` over the
+token array, whole-stage codegen); the model is count aggregates (one
+shuffle each, map-side combined) bounded by the distinct-gram count;
+natural-language n-gram frequency is Zipfian, so AQE skew-join handles
+the "of the" keys; the totals are one broadcast row. Nothing is ever
+collected.
 """
 
 from __future__ import annotations
@@ -56,6 +115,25 @@ from ..functions.text import _TOKENS  # single tokenizer source
 #: three-token docs distinguishable and sums far below int64 overflow
 #: (a doc would need ~9e9 tokens at p=1.0 to overflow).
 LM_QUANT = 1_000_000_000
+
+#: per-order count-table columns ``(gram, count, context, context
+#: count)`` — the persisted model layout (``write_lm_model`` and lm3/lm5
+#: fits written as parquet are read back by these names). The unigram
+#: leg is ``uni(t, cu)`` + ``totals(n_tokens, v)``; the bigram model
+#: has only ``vocab(v)``.
+_LEGS = {
+    2: ("big", "cb", "w1", "cp"),
+    3: ("tri", "c3", "ctx", "cp3"),
+    4: ("g4", "c4", "ctx4", "cp4"),
+    5: ("g5", "c5", "ctx5", "cp5"),
+}
+
+#: per public order: scorer output ``(n-gram count, qp sum, score)``
+_OUTPUT = {
+    2: ("n_bigrams", "lm_prob_sum", "lm_score"),
+    3: ("n_trigrams", "lm3_prob_sum", "lm3_score"),
+    5: ("n_5grams", "lm5_prob_sum", "lm5_score"),
+}
 
 
 def _token_arrays(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -81,13 +159,12 @@ def _shared_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return tok if docs.isStreaming else tok.localCheckpoint(eager=False)
 
 
-def _ngrams_from_tokens(
-    tok: DataFrame, id_col: str, n: int, out: str
-) -> DataFrame:
-    """``(id, 'w1 .. wn')`` rows from a ``(id, tk)`` token frame —
-    the extraction tail of :func:`_doc_ngrams` (same scan-side shape;
-    NULL/short token arrays emit nothing; the sequence() guard
-    matters: Spark's sequence(1, 0) counts DOWN)."""
+def _ngrams(tok: DataFrame, id_col: str, n: int) -> DataFrame:
+    """``(id, 'w1 .. wn')`` (gram column named per :data:`_LEGS`), one
+    row per adjacent token n-gram of a ``(id, tk)`` token frame.
+    Scan-side: pairing runs inside codegen; NULL or shorter-than-``n``
+    token arrays emit nothing (the guard matters: Spark's
+    sequence(1, 0) counts DOWN)."""
     joined = ", ' ', ".join(f"element_at(tk, i + {j})" for j in range(n))
     return tok.where(F.expr(f"tk IS NOT NULL AND size(tk) >= {n}")).select(
         F.col(id_col),
@@ -96,16 +173,146 @@ def _ngrams_from_tokens(
                 f"transform(sequence(1, size(tk) - {n - 1}),"
                 f" i -> concat({joined}))"
             )
-        ).alias(out),
+        ).alias(_LEGS[n][0]),
     )
 
 
-def _doc_bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One ``(id, 'w1 w2')`` row per adjacent token pair. Scan-side:
-    the token array, lowering, and pairing all run inside codegen;
-    docs with NULL text or fewer than two tokens emit nothing."""
-    return _ngrams_from_tokens(
-        _token_arrays(docs, id_col, text_col), id_col, 2, "big"
+def _fit(
+    reference: DataFrame,
+    n: int,
+    id_col: str,
+    text_col: str,
+    tokens: DataFrame | None = None,
+) -> tuple[DataFrame, ...]:
+    """The order-``n`` count tables ``(g_n, ctx_n, .., g_2, ctx_2)``
+    (columns per :data:`_LEGS`) followed by ``vocab(v)`` for the
+    bigram or ``uni(t, cu), totals(n_tokens, v)`` above it. Every leg
+    reads ONE token frame: ``tokens=`` shares the caller's, otherwise
+    one is materialized here."""
+    tok = tokens if tokens is not None else _shared_tokens(
+        reference, id_col, text_col
+    )
+    tables = []
+    for k in range(n, 1, -1):
+        gram, c, ctx, cp = _LEGS[k]
+        counts = _ngrams(tok, id_col, k).groupBy(gram).agg(
+            F.count("*").alias(c)
+        )
+        ctx_counts = (
+            counts.withColumn(ctx, F.substring_index(gram, " ", k - 1))
+            .groupBy(ctx)
+            .agg(F.sum(c).alias(cp))
+        )
+        tables += [counts, ctx_counts]
+    stream = tok.select(F.explode(F.col("tk")).alias("t"))
+    if n == 2:
+        return (*tables, stream.agg(F.count_distinct("t").alias("v")))
+    uni_counts = stream.groupBy("t").agg(F.count("*").alias("cu"))
+    totals = stream.agg(
+        F.count("*").alias("n_tokens"), F.count_distinct("t").alias("v")
+    )
+    return (*tables, uni_counts, totals)
+
+
+def _qp_sql(n: int) -> str:
+    """The quantized interpolated probability of an order-``n`` gram
+    over the joined count columns (module docstring: weights per
+    order, one correctly rounded step each)."""
+    weights = (1, 0) if n == 2 else tuple(range(n, 0, -1))
+    legs = [
+        (_LEGS[k][1], f"coalesce({_LEGS[k][3]}, 0)") for k in range(n, 1, -1)
+    ] + [("cu", "n_tokens")]
+    # greatest(v, 1): a reference with no tokens makes V = 0 and every
+    # context count NULL — without the floor the divisor is 0 and ANSI
+    # mode kills the job; with it every leg is the uniform ceiling
+    terms = [
+        ("" if w == 1 else f"{w}.0 * ")
+        + f"(cast(coalesce({c}, 0) + 1 as double)"
+        f" / cast({ctx} + greatest(v, 1) as double))"
+        for w, (c, ctx) in zip(weights, legs)
+        if w
+    ]
+    p = " + ".join(terms)
+    if len(terms) > 1:
+        p = f"({p})"
+    if sum(weights) != 1:
+        p += f" / {sum(weights)}.0"
+    # marked line: a single-engine deployment swaps this for ln(...)
+    # (true log-perplexity) or tuned-λ interpolation
+    return f"cast(round({p} * {LM_QUANT}.0) as bigint)"
+
+
+def _scores(
+    docs: DataFrame,
+    n: int,
+    reference: DataFrame | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    model: tuple[DataFrame, ...] | None = None,
+) -> DataFrame:
+    """Per-document order-``n`` LM fit ``(id, *_OUTPUT[n])`` against
+    ``model`` (a :func:`_fit` tuple), else against a model fitted on
+    ``reference`` (``None``: on ``docs`` itself)."""
+    gram = _LEGS[n][0]
+    ref = reference if reference is not None else docs
+    self_trained = model is None and ref is docs
+    if model is None:
+        tok = _shared_tokens(ref, id_col, text_col)
+        model = _fit(ref, n, id_col, text_col, tokens=tok)
+    # self-trained, the scoring stream reads the SAME materialized token
+    # arrays the fit legs read; otherwise it tokenizes docs on its own
+    if not self_trained:
+        tok = _token_arrays(docs, id_col, text_col)
+    grams = _ngrams(tok, id_col, n)
+    # plan shape rule (module docstring): order 2 rides the
+    # per-occurrence stream, higher orders the distinct grams
+    if n == 2:
+        scored = grams.join(model[0], gram, "left")
+    elif self_trained:
+        scored = model[0]  # corpus grams == count keys
+    else:
+        scored = grams.select(gram).distinct().join(model[0], gram, "left")
+    legs = zip(range(n, 1, -1), model[0::2], model[1::2])
+    for k, counts, ctx_counts in legs:
+        g, _, ctx, _ = _LEGS[k]
+        if k < n:
+            scored = scored.withColumn(
+                g, F.substring_index(gram, " ", -k)
+            ).join(counts, g, "left")
+        scored = scored.withColumn(
+            ctx, F.substring_index(g, " ", k - 1)
+        ).join(ctx_counts, ctx, "left")
+    if n > 2:
+        scored = scored.withColumn(
+            "t", F.substring_index(gram, " ", -1)
+        ).join(model[-2], "t", "left")
+    scored = scored.crossJoin(F.broadcast(model[-1]))
+    qp = F.expr(_qp_sql(n)).alias("qp")
+    n_col, sum_col, score_col = _OUTPUT[n]
+    if n == 2:
+        agg = scored.select(F.col(id_col), qp).groupBy(id_col).agg(
+            F.count("*").alias(n_col), F.sum("qp").alias(sum_col)
+        )
+    else:
+        occ = grams.groupBy(id_col, gram).agg(F.count("*").alias("__m"))
+        # inner join: every doc gram is in the qp table by construction
+        agg = (
+            occ.join(scored.select(gram, qp), gram)
+            .groupBy(id_col)
+            .agg(
+                F.sum("__m").alias(n_col),
+                F.sum(F.col("__m") * F.col("qp")).alias(sum_col),
+            )
+        )
+    return docs.select(id_col).join(agg, id_col, "left").select(
+        F.col(id_col),
+        F.coalesce(F.col(n_col), F.lit(0)).cast("long").alias(n_col),
+        F.coalesce(F.col(sum_col), F.lit(0)).cast("long").alias(sum_col),
+        F.when(
+            F.col(n_col) > 0,
+            (F.col(sum_col).cast("double") / F.col(n_col).cast("double"))
+            / F.lit(float(LM_QUANT)),
+        ).alias(score_col),
     )
 
 
@@ -115,31 +322,12 @@ def lm_fit(
     text_col: str = "text",
     tokens: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Train the bigram model: ``(big_counts(big, cb),
-    prev_counts(w1, cp), vocab(v))`` — the three tables
-    :func:`lm_transition_scores` consumes via ``model=``. Persist them
-    (plain parquet) to score many corpora — or a STREAM
-    (``streaming/quality.py::run_lm_score_stream``) — against one
-    fixed reference without refitting.
-
+    """Fit the bigram model: ``(big_counts(big, cb), prev_counts(w1,
+    cp), vocab(v))`` — the ``model=`` tuple of
+    :func:`lm_transition_scores` and the ``write_lm_model`` layout.
     ``tokens=`` takes a pre-tokenized ``(id, tk)`` frame (the
-    :func:`_shared_tokens` shape) so the bigram and vocab legs share
-    one tokenize pass; by default one is materialized here."""
-    tok = tokens if tokens is not None else _shared_tokens(
-        reference, id_col, text_col
-    )
-    ref_bg = _ngrams_from_tokens(tok, id_col, 2, "big")
-    big_counts = ref_bg.groupBy("big").agg(F.count("*").alias("cb"))
-    prev_counts = (
-        big_counts.withColumn("w1", F.substring_index("big", " ", 1))
-        .groupBy("w1")
-        .agg(F.sum("cb").alias("cp"))
-    )
-    vocab = (
-        tok.select(F.explode(F.col("tk")).alias("t"))
-        .agg(F.count_distinct("t").alias("v"))
-    )
-    return big_counts, prev_counts, vocab
+    :func:`_shared_tokens` shape)."""
+    return _fit(reference, 2, id_col, text_col, tokens)
 
 
 def lm_transition_scores(
@@ -150,90 +338,12 @@ def lm_transition_scores(
     model: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Per-document bigram-LM fit: ``(id, n_bigrams, lm_prob_sum,
-    lm_score)`` where ``lm_score`` is the mean add-one-smoothed
-    transition probability under the reference model (see module
-    docstring for the exactness contract) — higher = more
-    reference-like; a filtering job keeps ``lm_score >= cutoff`` or
-    the top quantile. Docs with fewer than two tokens (or NULL text)
-    get ``n_bigrams = 0`` and a NULL score: no evidence, not bad
-    evidence — route them to the heuristic stats instead.
-
-    ``model=`` takes the pre-fitted count tables from :func:`lm_fit`
-    (read back from parquet in a standing deployment) and skips
-    training entirely; otherwise ``reference=None`` trains on ``docs``
-    itself; bigrams unseen in an
-    external reference back off to count 0 (the add-one floor), and an
-    unseen context ``w1`` scores ``1 / V`` — smoothing keeps every
-    probability finite and nonzero. Add-one artifact to know when
-    setting cutoffs: an unseen CONTEXT's uniform ``1/V`` can exceed a
-    frequent context's unseen-continuation floor ``1/(c(w1)+V)``, so
-    fully-OOV gibberish is not guaranteed to score below shuffled
-    common words — the reliable signal is reference-like transitions
-    scoring far above both floors (pinned in the tests; a production
-    deployment wanting Kneser-Ney/backoff swaps the probability
-    expression at the same marked line as the ln swap). Every doc row is preserved in the
-    output (left join back to ``docs``), duplicate ids share one score
-    group, NULL ids ride through with NULL stats (null-unsafe join,
-    the engine-wide rule).
-    """
-    doc_bg = None
-    if model is not None:
-        big_counts, prev_counts, vocab = model
-    else:
-        ref = reference if reference is not None else docs
-        tok = _shared_tokens(ref, id_col, text_col)
-        big_counts, prev_counts, vocab = lm_fit(
-            ref, id_col, text_col, tokens=tok
-        )
-        if ref is docs:
-            # self-trained: the scoring stream reads the SAME
-            # materialized token arrays the fit legs read
-            doc_bg = _ngrams_from_tokens(tok, id_col, 2, "big")
-    if doc_bg is None:
-        doc_bg = _doc_bigrams(docs, id_col, text_col)
-    scored = (
-        doc_bg
-        .join(big_counts, "big", "left")
-        .withColumn("w1", F.substring_index("big", " ", 1))
-        .join(prev_counts, "w1", "left")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            F.col(id_col),
-            # one division, one multiply, half-up round: every step
-            # correctly rounded -> engine-exact. Swap this expression
-            # for ln(...) to get true log-perplexity on a single engine.
-            # greatest(v, 1): a reference with no tokens at all makes
-            # V = 0 and every cp NULL — without the floor the divisor
-            # is 0 and ANSI mode kills the job; with it the degenerate
-            # model scores every transition at the uniform ceiling
-            # (uninformative but finite — validate the reference
-            # upstream). Normal references never hit the floor.
-            F.expr(
-                "cast(round((cast(coalesce(cb, 0) + 1 as double)"
-                " / cast(coalesce(cp, 0) + greatest(v, 1) as double))"
-                f" * {LM_QUANT}.0) as bigint)"
-            ).alias("qp"),
-        )
-    )
-    agg = scored.groupBy(id_col).agg(
-        F.count("*").alias("n_bigrams"),
-        F.sum("qp").alias("lm_prob_sum"),
-    )
-    return docs.select(id_col).join(agg, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("n_bigrams"), F.lit(0)).cast("long").alias("n_bigrams"),
-        F.coalesce(F.col("lm_prob_sum"), F.lit(0)).cast("long").alias(
-            "lm_prob_sum"
-        ),
-        F.when(
-            F.col("n_bigrams") > 0,
-            (
-                F.col("lm_prob_sum").cast("double")
-                / F.col("n_bigrams").cast("double")
-            )
-            / F.lit(float(LM_QUANT)),
-        ).alias("lm_score"),
-    )
+    lm_score)`` — higher = more reference-like; a filtering job keeps
+    ``lm_score >= cutoff`` or the top quantile. ``model=`` takes the
+    :func:`lm_fit` tables (read back from parquet in a standing
+    deployment) and skips training; otherwise ``reference=None``
+    trains on ``docs`` itself."""
+    return _scores(docs, 2, reference, id_col, text_col, model)
 
 
 def lm_quality_buckets(
@@ -344,53 +454,17 @@ def lm_quality_buckets(
     )
 
 
-def _doc_trigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One ``(id, 'w1 w2 w3')`` row per adjacent token triple —
-    the trigram twin of :func:`_doc_bigrams` (same scan-side shape;
-    docs with NULL text or fewer than three tokens emit nothing).
-    Tokens contain no whitespace, so the space-joined string is an
-    injective trigram key and ``substring_index`` recovers every
-    component/sub-key exactly (the DuckDB oracle mirrors with
-    split_part/||)."""
-    return _ngrams_from_tokens(
-        _token_arrays(docs, id_col, text_col), id_col, 3, "tri"
-    )
-
-
 def lm3_fit(
     reference: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     tokens: DataFrame | None = None,
 ) -> tuple[DataFrame, ...]:
-    """Train the interpolated-trigram model: ``(tri_counts(tri, c3),
+    """Fit the interpolated-trigram model: ``(tri_counts(tri, c3),
     ctx_counts(ctx, cp3), big_counts(big, cb), prev_counts(w1, cp),
-    uni_counts(w, cu), totals(n_tokens, v))`` — six plain count
-    tables :func:`lm3_transition_scores` consumes via ``model=``
-    (persist them as parquet for a standing deployment, exactly like
-    :func:`lm_fit`). The bigram/vocab legs reuse :func:`lm_fit`; every
-    leg reads ONE shared materialized token frame (``tokens=`` to
-    share it wider — :func:`lm5_fit` and the self-trained scorers
-    do)."""
-    tok = tokens if tokens is not None else _shared_tokens(
-        reference, id_col, text_col
-    )
-    tri = _ngrams_from_tokens(tok, id_col, 3, "tri")
-    tri_counts = tri.groupBy("tri").agg(F.count("*").alias("c3"))
-    ctx_counts = (
-        tri_counts.withColumn("ctx", F.substring_index("tri", " ", 2))
-        .groupBy("ctx")
-        .agg(F.sum("c3").alias("cp3"))
-    )
-    big_counts, prev_counts, _ = lm_fit(
-        reference, id_col, text_col, tokens=tok
-    )
-    tok_stream = tok.select(F.explode(F.col("tk")).alias("t"))
-    uni_counts = tok_stream.groupBy("t").agg(F.count("*").alias("cu"))
-    totals = tok_stream.agg(
-        F.count("*").alias("n_tokens"), F.count_distinct("t").alias("v")
-    )
-    return tri_counts, ctx_counts, big_counts, prev_counts, uni_counts, totals
+    uni_counts(t, cu), totals(n_tokens, v))`` — the ``model=`` tuple of
+    :func:`lm3_transition_scores`."""
+    return _fit(reference, 3, id_col, text_col, tokens)
 
 
 def lm3_transition_scores(
@@ -400,128 +474,10 @@ def lm3_transition_scores(
     text_col: str = "text",
     model: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
-    """Per-document INTERPOLATED trigram-LM fit — the higher-order
-    quality scorer the CCNet recipe actually calls for (Wenzek et al.
-    arXiv:1911.00359 use a 5-gram KenLM; the bigram
-    :func:`lm_transition_scores` is the floor approximation, this is
-    the next rung with the same engine-exact arithmetic).
-
-    Per trigram ``w1 w2 w3`` the score is the fixed-weight linear
-    interpolation (Jelinek-Mercer with deterministic λ = (3,2,1)/6 —
-    interpolation rather than Katz/Kneser-Ney because every λ·p term
-    is one correctly-rounded IEEE multiply of an exact-integer
-    division, so the value-hash gate holds across engines; tuned
-    λ would need held-out EM, which a single-engine deployment can
-    swap in at the marked line):
-
-        p  = (3·p3 + 2·p2 + p1) / 6
-        p3 = (c(w1 w2 w3) + 1) / (c(w1 w2 ·) + V)      add-one trigram
-        p2 = (c(w2 w3) + 1)    / (c(w2 ·) + V)         add-one bigram
-        p1 = (c(w3) + 1)       / (N + V)               add-one unigram
-
-    quantized ``round(p * LM_QUANT)`` per transition; the doc score is
-    the mean quantized probability (same contract/shape as the bigram
-    scorer: ``(id, n_trigrams, lm3_prob_sum, lm3_score)``, NULL score
-    for docs with < 3 tokens — no evidence, not bad evidence).
-
-    The backoff behavior falls out of the interpolation: an unseen
-    trigram context contributes its uniform add-one floor while the
-    observed bigram/unigram legs still separate reference-like from
-    gibberish word order — the property the bigram scorer lacks for
-    any SINGLE unseen context (its 1/V artifact, module docstring).
-
-    100 TB: identical shape to the bigram path — scan-side n-gram
-    extraction, count aggregates with map-side combine, Zipf-keyed
-    joins (AQE skew-join), one broadcast totals row; nothing
-    collected.
-    """
-    doc_tri = None
-    base = None
-    if model is not None:
-        tri_counts, ctx_counts, big_counts, prev_counts, uni_counts, totals = model
-    else:
-        ref = reference if reference is not None else docs
-        tok = _shared_tokens(ref, id_col, text_col)
-        (
-            tri_counts, ctx_counts, big_counts, prev_counts, uni_counts, totals
-        ) = lm3_fit(ref, id_col, text_col, tokens=tok)
-        if ref is docs:
-            doc_tri = _ngrams_from_tokens(tok, id_col, 3, "tri")
-            base = tri_counts  # self-trained: corpus grams == count keys
-    if doc_tri is None:
-        doc_tri = _doc_trigrams(docs, id_col, text_col)
-    if base is None:
-        base = doc_tri.select("tri").distinct().join(tri_counts, "tri", "left")
-    # model joins over the DISTINCT-trigram table; the per-occurrence
-    # stream shuffles twice instead of riding all five joins — exact
-    # integer arithmetic, bit-identical score (see the lm5 spelling)
-    qp_tbl = (
-        base
-        .withColumn("ctx", F.substring_index("tri", " ", 2))
-        .join(ctx_counts, "ctx", "left")
-        .withColumn("big", F.substring_index("tri", " ", -2))
-        .join(big_counts, "big", "left")
-        .withColumn("w1", F.substring_index("big", " ", 1))
-        .join(prev_counts, "w1", "left")
-        .withColumn("t", F.substring_index("tri", " ", -1))
-        .join(uni_counts, "t", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "tri",
-            # marked line: a single-engine deployment swaps this for
-            # ln(...) (true log-perplexity) or tuned-λ interpolation
-            F.expr(
-                "cast(round(("
-                "3.0 * (cast(coalesce(c3, 0) + 1 as double)"
-                " / cast(coalesce(cp3, 0) + greatest(v, 1) as double))"
-                " + 2.0 * (cast(coalesce(cb, 0) + 1 as double)"
-                " / cast(coalesce(cp, 0) + greatest(v, 1) as double))"
-                " + (cast(coalesce(cu, 0) + 1 as double)"
-                " / cast(n_tokens + greatest(v, 1) as double))"
-                f") / 6.0 * {LM_QUANT}.0) as bigint)"
-            ).alias("qp"),
-        )
-    )
-    occ = doc_tri.groupBy(id_col, "tri").agg(F.count("*").alias("__m"))
-    agg = (
-        occ.join(qp_tbl, "tri")
-        .groupBy(id_col)
-        .agg(
-            F.sum("__m").alias("n_trigrams"),
-            F.sum(F.col("__m") * F.col("qp")).alias("lm3_prob_sum"),
-        )
-    )
-    return docs.select(id_col).join(agg, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("n_trigrams"), F.lit(0)).cast("long").alias(
-            "n_trigrams"
-        ),
-        F.coalesce(F.col("lm3_prob_sum"), F.lit(0)).cast("long").alias(
-            "lm3_prob_sum"
-        ),
-        F.when(
-            F.col("n_trigrams") > 0,
-            (
-                F.col("lm3_prob_sum").cast("double")
-                / F.col("n_trigrams").cast("double")
-            )
-            / F.lit(float(LM_QUANT)),
-        ).alias("lm3_score"),
-    )
-
-
-def _doc_ngrams(
-    docs: DataFrame, id_col: str, text_col: str, n: int, out: str
-) -> DataFrame:
-    """One ``(id, 'w1 .. wn')`` row per adjacent token n-gram — the
-    order-generic extractor behind :func:`_doc_bigrams` /
-    :func:`_doc_trigrams` (same scan-side shape; docs with NULL text
-    or fewer than ``n`` tokens emit nothing). Tokens contain no
-    whitespace, so the space-joined string is an injective n-gram key
-    and ``substring_index`` recovers every prefix/suffix sub-key."""
-    return _ngrams_from_tokens(
-        _token_arrays(docs, id_col, text_col), id_col, n, out
-    )
+    """Per-document interpolated trigram-LM fit (λ = (3, 2, 1) / 6):
+    ``(id, n_trigrams, lm3_prob_sum, lm3_score)``; ``model=`` takes the
+    :func:`lm3_fit` tables."""
+    return _scores(docs, 3, reference, id_col, text_col, model)
 
 
 def lm5_fit(
@@ -530,40 +486,13 @@ def lm5_fit(
     text_col: str = "text",
     tokens: DataFrame | None = None,
 ) -> tuple[DataFrame, ...]:
-    """Train the interpolated 5-gram model (the CCNet-published order
-    — Wenzek et al. arXiv:1911.00359 score with a 5-gram KenLM):
-    ``(g5_counts, ctx5_counts, g4_counts, ctx4_counts, tri_counts,
-    ctx_counts, big_counts, prev_counts, uni_counts, totals)`` — ten
-    plain count tables :func:`lm5_transition_scores` consumes via
-    ``model=`` (persist as parquet for a standing deployment). The
-    order-3/2/1 legs reuse :func:`lm3_fit` verbatim, so the lower
-    orders of the two scorers can never drift. Every order's
-    extraction reads ONE shared materialized token frame (``tokens=``
-    to share it with the caller's own scoring pass)."""
-    tok = tokens if tokens is not None else _shared_tokens(
-        reference, id_col, text_col
-    )
-    g5 = _ngrams_from_tokens(tok, id_col, 5, "g5")
-    g5_counts = g5.groupBy("g5").agg(F.count("*").alias("c5"))
-    ctx5_counts = (
-        g5_counts.withColumn("ctx5", F.substring_index("g5", " ", 4))
-        .groupBy("ctx5")
-        .agg(F.sum("c5").alias("cp5"))
-    )
-    g4 = _ngrams_from_tokens(tok, id_col, 4, "g4")
-    g4_counts = g4.groupBy("g4").agg(F.count("*").alias("c4"))
-    ctx4_counts = (
-        g4_counts.withColumn("ctx4", F.substring_index("g4", " ", 3))
-        .groupBy("ctx4")
-        .agg(F.sum("c4").alias("cp4"))
-    )
-    (
-        tri_counts, ctx_counts, big_counts, prev_counts, uni_counts, totals
-    ) = lm3_fit(reference, id_col, text_col, tokens=tok)
-    return (
-        g5_counts, ctx5_counts, g4_counts, ctx4_counts,
-        tri_counts, ctx_counts, big_counts, prev_counts, uni_counts, totals,
-    )
+    """Fit the interpolated 5-gram model (CCNet's published order):
+    ``(g5_counts(g5, c5), ctx5_counts(ctx5, cp5), g4_counts(g4, c4),
+    ctx4_counts(ctx4, cp4), tri_counts, ctx_counts, big_counts,
+    prev_counts, uni_counts, totals)`` — the last six exactly
+    :func:`lm3_fit`'s; the ``model=`` tuple of
+    :func:`lm5_transition_scores`."""
+    return _fit(reference, 5, id_col, text_col, tokens)
 
 
 def lm5_transition_scores(
@@ -573,131 +502,7 @@ def lm5_transition_scores(
     text_col: str = "text",
     model: tuple[DataFrame, ...] | None = None,
 ) -> DataFrame:
-    """Per-document interpolated 5-GRAM LM fit — the published CCNet
-    order (their KenLM is a 5-gram; :func:`lm3_transition_scores` is
-    the middle rung, this closes the gap with the same engine-exact
-    arithmetic). Per 5-gram ``w1 .. w5`` the score is the fixed-weight
-    Jelinek-Mercer interpolation λ = (5,4,3,2,1)/15 over the add-one
-    legs of orders 5..1 (descending weight with order, the lm3
-    convention extended; tuned λ would need held-out EM — swap at the
-    marked line on a single-engine deployment):
-
-        p  = (5·p5 + 4·p4 + 3·p3 + 2·p2 + p1) / 15
-        pK = (c(w_{6-K} .. w5) + 1) / (c(context) + V)   add-one, K=5..2
-        p1 = (c(w5) + 1) / (N + V)
-
-    every step correctly rounded (integer counts, one exact cast per
-    operand, one division per leg, one multiply, half-up round) →
-    bit-identical across engines, the repo-wide LM determinism
-    contract. Output ``(id, n_5grams, lm5_prob_sum, lm5_score)``;
-    docs with < 5 tokens get ``n_5grams = 0`` and a NULL score (no
-    evidence, not bad evidence). Long-range repetition that trigram
-    context cannot see (4-token templates re-used across a corpus)
-    moves the order-5 legs — which documents a percentile cut keeps
-    changes vs lm3 (pinned in tests/test_lm5.py).
-
-    100 TB: identical shape to the lower orders — scan-side n-gram
-    extraction, map-combined count aggregates, Zipf-keyed joins under
-    AQE skew handling, one broadcast totals row; nothing collected.
-    """
-    doc_g5 = None
-    base = None
-    if model is not None:
-        (
-            g5_counts, ctx5_counts, g4_counts, ctx4_counts,
-            tri_counts, ctx_counts, big_counts, prev_counts, uni_counts,
-            totals,
-        ) = model
-    else:
-        ref = reference if reference is not None else docs
-        tok = _shared_tokens(ref, id_col, text_col)
-        (
-            g5_counts, ctx5_counts, g4_counts, ctx4_counts,
-            tri_counts, ctx_counts, big_counts, prev_counts, uni_counts,
-            totals,
-        ) = lm5_fit(ref, id_col, text_col, tokens=tok)
-        if ref is docs:
-            doc_g5 = _ngrams_from_tokens(tok, id_col, 5, "g5")
-            # self-trained: the corpus's distinct 5-grams ARE the
-            # fitted count table's keys — no distinct pass, and the
-            # c5 leg needs no join
-            base = g5_counts
-    if doc_g5 is None:
-        doc_g5 = _doc_ngrams(docs, id_col, text_col, 5, "g5")
-    if base is None:
-        base = doc_g5.select("g5").distinct().join(g5_counts, "g5", "left")
-    # qp is a pure function of the 5-gram STRING (every joined count
-    # keys off g5 or a substring of it), so the model joins run over
-    # the DISTINCT-gram table — gram + count rows only — and the
-    # per-occurrence corpus stream shuffles twice (the (id, g5)
-    # pre-aggregation and the qp attach) instead of riding all nine
-    # model joins. sum over occurrences == sum over distinct
-    # (id, g5) of occurrences x qp: exact integer arithmetic either
-    # way, bit-identical score.
-    qp_tbl = (
-        base
-        .withColumn("ctx5", F.substring_index("g5", " ", 4))
-        .join(ctx5_counts, "ctx5", "left")
-        .withColumn("g4", F.substring_index("g5", " ", -4))
-        .join(g4_counts, "g4", "left")
-        .withColumn("ctx4", F.substring_index("g4", " ", 3))
-        .join(ctx4_counts, "ctx4", "left")
-        .withColumn("tri", F.substring_index("g5", " ", -3))
-        .join(tri_counts, "tri", "left")
-        .withColumn("ctx", F.substring_index("tri", " ", 2))
-        .join(ctx_counts, "ctx", "left")
-        .withColumn("big", F.substring_index("g5", " ", -2))
-        .join(big_counts, "big", "left")
-        .withColumn("w1", F.substring_index("big", " ", 1))
-        .join(prev_counts, "w1", "left")
-        .withColumn("t", F.substring_index("g5", " ", -1))
-        .join(uni_counts, "t", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "g5",
-            # marked line: swap for ln(...) / tuned-λ interpolation on
-            # a single-engine deployment
-            F.expr(
-                "cast(round(("
-                "5.0 * (cast(coalesce(c5, 0) + 1 as double)"
-                " / cast(coalesce(cp5, 0) + greatest(v, 1) as double))"
-                " + 4.0 * (cast(coalesce(c4, 0) + 1 as double)"
-                " / cast(coalesce(cp4, 0) + greatest(v, 1) as double))"
-                " + 3.0 * (cast(coalesce(c3, 0) + 1 as double)"
-                " / cast(coalesce(cp3, 0) + greatest(v, 1) as double))"
-                " + 2.0 * (cast(coalesce(cb, 0) + 1 as double)"
-                " / cast(coalesce(cp, 0) + greatest(v, 1) as double))"
-                " + (cast(coalesce(cu, 0) + 1 as double)"
-                " / cast(n_tokens + greatest(v, 1) as double))"
-                f") / 15.0 * {LM_QUANT}.0) as bigint)"
-            ).alias("qp"),
-        )
-    )
-    occ = doc_g5.groupBy(id_col, "g5").agg(F.count("*").alias("__m"))
-    # inner join: every doc gram is in base by construction (the
-    # self-trained count table / the docs-side distinct)
-    agg = (
-        occ.join(qp_tbl, "g5")
-        .groupBy(id_col)
-        .agg(
-            F.sum("__m").alias("n_5grams"),
-            F.sum(F.col("__m") * F.col("qp")).alias("lm5_prob_sum"),
-        )
-    )
-    return docs.select(id_col).join(agg, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("n_5grams"), F.lit(0)).cast("long").alias(
-            "n_5grams"
-        ),
-        F.coalesce(F.col("lm5_prob_sum"), F.lit(0)).cast("long").alias(
-            "lm5_prob_sum"
-        ),
-        F.when(
-            F.col("n_5grams") > 0,
-            (
-                F.col("lm5_prob_sum").cast("double")
-                / F.col("n_5grams").cast("double")
-            )
-            / F.lit(float(LM_QUANT)),
-        ).alias("lm5_score"),
-    )
+    """Per-document interpolated 5-gram LM fit (λ = (5, 4, 3, 2, 1) /
+    15): ``(id, n_5grams, lm5_prob_sum, lm5_score)``; ``model=`` takes
+    the :func:`lm5_fit` tables."""
+    return _scores(docs, 5, reference, id_col, text_col, model)

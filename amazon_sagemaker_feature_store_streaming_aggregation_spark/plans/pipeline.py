@@ -421,11 +421,7 @@ def quality_filter(
         raise ValueError(f"lm_order must be 2, 3 or 5, got {lm_order}")
     if scorer not in ("lm", "linear"):
         raise ValueError(f"scorer must be 'lm' or 'linear', got {scorer}")
-    from ..operators.lm import (
-        lm3_transition_scores,
-        lm5_transition_scores,
-        lm_transition_scores,
-    )
+    from ..operators.lm import _OUTPUT, _scores
     from ..operators.training_data import remove_boilerplate_lines
 
     cleaned = remove_boilerplate_lines(
@@ -439,13 +435,14 @@ def quality_filter(
     clean_docs = cleaned.select(
         F.col(id_col), F.col("text_clean").alias("text")
     )
-    # lm_order=3: the interpolated-trigram scorer (lm3_transition_
-    # scores) under the SAME output contract — the score column keeps
-    # the name lm_score so downstream stages are order-agnostic; the
-    # evidence column keeps its true name (n_trigrams). On the fixture
-    # corpus the two orders disagree on which docs the bottom-20% cut
-    # drops (pinned in tests/test_lm3.py) — trigram context separates
-    # reference-like word ORDER that bigram counts cannot.
+    # lm_order picks the n-gram order (operators/lm.py: one model, the
+    # bigram the default) under ONE output contract: the score column
+    # is renamed lm_score so downstream stages are order-agnostic; the
+    # evidence column keeps its true name (n_bigrams / n_trigrams /
+    # n_5grams). On the fixture corpus the orders disagree on which
+    # docs the bottom-20% cut drops (pinned in tests/test_lm3.py and
+    # tests/test_lm5.py) — longer context separates reference-like
+    # word ORDER that bigram counts cannot.
     if scorer == "linear":
         from ..operators.quality_clf import classify_quality
 
@@ -469,23 +466,11 @@ def quality_filter(
                 F.col("quality_margin").cast("double").alias("lm_score"),
             )
         )
-    elif lm_order == 5:
-        n_col = "n_5grams"
-        scored = lm5_transition_scores(clean_docs, id_col=id_col).select(
-            F.col(id_col),
-            F.col("n_5grams"),
-            F.col("lm5_score").alias("lm_score"),
-        )
-    elif lm_order == 3:
-        n_col = "n_trigrams"
-        scored = lm3_transition_scores(clean_docs, id_col=id_col).select(
-            F.col(id_col),
-            F.col("n_trigrams"),
-            F.col("lm3_score").alias("lm_score"),
-        )
     else:
-        n_col = "n_bigrams"
-        scored = lm_transition_scores(clean_docs, id_col=id_col)
+        n_col, _, score_col = _OUTPUT[lm_order]
+        scored = _scores(clean_docs, lm_order, id_col=id_col).select(
+            F.col(id_col), F.col(n_col), F.col(score_col).alias("lm_score")
+        )
     keep_cols = ["n_removed"] + (["text_clean"] if with_text else [])
     scorable = scored.where(F.col(n_col) > 0).join(
         cleaned.select(id_col, *keep_cols), id_col

@@ -771,7 +771,11 @@ def test_curate_near_trigger_job_count(spark, tmp_path):
     assert kept.count() > 0
 
     def names(jid):
-        return [tracker.getStageInfo(s).name for s in tracker.getJobInfo(jid).stageIds]
+        # a skipped stage never ran, and once the session has passed
+        # spark.ui.retainedStages the status store drops skipped stages
+        # first, however recent: their info may be gone
+        infos = (tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds)
+        return [i.name for i in infos if i is not None]
 
     parquet_jobs = [j for j in jobs if any(n.startswith("parquet") for n in names(j))]
     assert len(jobs) <= 20, sorted(jobs)

@@ -9,7 +9,9 @@ rows) whose window holds their submission; ``thread`` is ``stream`` for
 jobs the ``foreachBatch`` thread launched (their job group is the query's
 run id) and ``pool`` for the rest (e.g. ``_run_independent`` siblings).
 Each trigger ends with its totals: jobs, tasks, the wall time some job
-was running, and the driver gap (trigger time in which none was).
+was running, and the driver gap (trigger time in which none was). A log
+with no streaming trigger (a batch query) is listed per job group
+instead: a query key runs under the groups ``warm`` and ``profiled``.
 
 Usage::
 
@@ -64,15 +66,22 @@ def print_table(path: str) -> None:
     jobs, progress = read_log(path)
     meta = job_meta(path)
     run_ids = {p["runId"] for p in progress}
-    triggers = sorted(
+    blocks = []  # (title, jobs, start, end)
+    for p in sorted(
         (p for p in progress if input_rows(p) > 0), key=lambda p: epoch(p["timestamp"])
-    )
-    for p in triggers:
+    ):
         s = epoch(p["timestamp"])
         e = s + p["batchDuration"] / 1000.0
-        mine = [j for j in jobs if s <= j["start"] <= e]
-        print(f"== batch {p['batchId']}: {p['batchDuration'] / 1000.0:.2f} s, "
-              f"{input_rows(p)} input rows")
+        blocks.append((f"batch {p['batchId']}: {p['batchDuration'] / 1000.0:.2f} s, "
+                       f"{input_rows(p)} input rows",
+                       [j for j in jobs if s <= j["start"] <= e], s, e))
+    if not blocks:  # no streaming trigger: one block per job group
+        for group in dict.fromkeys(j["group"] for j in jobs):
+            mine = [j for j in jobs if j["group"] == group]
+            s, e = mine[0]["start"], max(j["end"] for j in mine)
+            blocks.append((f"job group {group}: {e - s:.2f} s", mine, s, e))
+    for title, mine, s, e in blocks:
+        print(f"== {title}")
         print(f"  {'job':>5} {'sql':>5} {'thread':>6} {'tasks':>5} {'dur_s':>6}  stage")
         for j in mine:
             sql, stage = meta.get(j["id"], ("-", ""))
@@ -104,7 +113,8 @@ def run_query(name: str, log_dir: str) -> None:
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[name]
-    for _ in range(2):
+    for run in ("warm", "profiled"):
+        spark.sparkContext.setJobGroup(run, name)
         df = fn(spark, sf_dir)
         df.select(F.count(F.lit(1)), F.bit_xor(F.xxhash64(F.struct(*df.columns)))).first()
     spark.stop()
